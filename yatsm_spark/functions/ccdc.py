@@ -25,8 +25,8 @@ No scipy/sklearn: the F-distribution CDF needed by K9 is computed with an
 own regularized-incomplete-beta continued fraction (Lentz), standard
 public-domain numerics (cf. Numerical Recipes §6.4 formulas).
 
-These kernels never see Spark: plans/segmentation.py feeds them pandas
-groups via applyInPandas.
+These kernels never see Spark: plans/segmentation.py feeds them url
+groups through the url-sorted grouped map (plans/grouped.py).
 """
 
 from __future__ import annotations
@@ -257,6 +257,11 @@ def mad_screen(y: np.ndarray, crit: float = 3.5) -> np.ndarray:
     return np.abs(y - med) <= crit * sigma
 
 
+# cells (rows x window) of one lowess row block: bounds its temporaries
+# to a few MB whatever the series length
+_LOWESS_CELLS = 1 << 16
+
+
 def lowess(
     t: np.ndarray, y: np.ndarray, frac: float = 0.3, it: int = 2, k: int | None = None
 ) -> np.ndarray:
@@ -270,6 +275,12 @@ def lowess(
     no RNG.  O(n * k) with k = window size — fine for the per-series
     screening sizes CCDC uses it for (the reference screens with
     statsmodels lowess in yatsm/masking.py [U]).
+
+    Vectorized, bit-identical to the per-point sliding-window loop (the
+    test reference): window starts come from a vectorized search of the
+    loop's predicate, which holds on a prefix of ``lo`` growing with i;
+    fits run on (rows x k) window matrices in row blocks of at most
+    ``_LOWESS_CELLS`` cells, so memory stays bounded for giant series.
     """
     t = np.asarray(t, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -281,31 +292,42 @@ def lowess(
     k = min(n, max(2, int(math.ceil(frac * n)) if k is None else k))
     order = np.argsort(t, kind="stable")
     ts, ys = t[order], y[order]
+    # window starts lo_i = #{lo < n-k : ts[lo+k]-ts[i] < ts[i]-ts[lo]},
+    # found for every i at once by binary lifting over the prefix
+    left = np.zeros(n, dtype=np.int64)
+    bit = (1 << (n - k).bit_length()) >> 1
+    while bit:
+        c = left + bit
+        ok = c <= n - k
+        j = np.where(ok, c - 1, 0)
+        left = np.where(ok & (ts[j + k] - ts < ts - ts[j]), c, left)
+        bit >>= 1
+    win = np.lib.stride_tricks.sliding_window_view
+    ts_w, ys_w = win(ts, k), win(ys, k)
+    step = max(1, _LOWESS_CELLS // k)
     fitted_s = np.empty(n)
     delta = np.ones(n)
     for _iter in range(it + 1):
-        lo = 0
-        for i in range(n):
-            # slide the k-window to the neighborhood nearest ts[i]
-            while lo + k < n and ts[lo + k] - ts[i] < ts[i] - ts[lo]:
-                lo += 1
-            hi = lo + k
-            tw, yw, dw = ts[lo:hi], ys[lo:hi], delta[lo:hi]
-            d = np.abs(tw - ts[i])
-            dmax = d.max() + _EPS
+        dl_w = win(delta, k)
+        for a in range(0, n, step):
+            lo, ti = left[a : a + step], ts[a : a + step, None]
+            tw, yw = ts_w[lo], ys_w[lo]
+            d = np.abs(tw - ti)
+            dmax = d.max(axis=1, keepdims=True) + _EPS
             w = (1.0 - (d / dmax) ** 3) ** 3  # tricube
-            w = w * dw
-            sw = w.sum()
-            if sw <= _EPS:
-                fitted_s[i] = ys[i]
-                continue
+            w = w * dl_w[lo]
+            sw = w.sum(axis=1, keepdims=True)
+            flat = sw[:, 0] <= _EPS  # no weight: the point keeps its value
+            sw[flat] = 1.0
             # weighted linear fit at ts[i] (closed form, 2x2 normal eqs)
-            tm = (w * tw).sum() / sw
-            ym = (w * yw).sum() / sw
-            cov = (w * (tw - tm) * (yw - ym)).sum()
-            var = (w * (tw - tm) ** 2).sum()
-            beta = cov / var if var > _EPS else 0.0
-            fitted_s[i] = ym + beta * (ts[i] - tm)
+            tm = (w * tw).sum(axis=1, keepdims=True) / sw
+            ym = (w * yw).sum(axis=1, keepdims=True) / sw
+            cov = (w * (tw - tm) * (yw - ym)).sum(axis=1, keepdims=True)
+            var = (w * (tw - tm) ** 2).sum(axis=1, keepdims=True)
+            steep = var > _EPS
+            beta = np.where(steep, cov / np.where(steep, var, 1.0), 0.0)
+            fit = (ym + beta * (ti - tm))[:, 0]
+            fitted_s[a : a + step] = np.where(flat, ys[a : a + step], fit)
         if _iter == it:
             break
         resid = ys - fitted_s

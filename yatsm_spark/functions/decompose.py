@@ -31,8 +31,8 @@ rule would flag numerical dust.
 Upstream parity note: the reference has no STL (its seasonality lives
 in the harmonic regression K1/K5); this extends the engine's analytics
 family (SURVEY §2.4 A15+) with the decomposition every observability
-TSDB ships.  Scale shape identical to segmentation: ONE shuffle on url,
-per-group numpy O(n · frac · n) bounded by the lowess block size,
+TSDB ships.  Scale shape identical to segmentation: ONE shuffle on url
+(plans/grouped.py::map_sorted_groups), per-group numpy O(n · frac · n),
 embarrassingly parallel across urls.
 """
 
@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yatsm_spark.functions.ccdc import lowess
+from yatsm_spark.plans.grouped import group_bounds, map_sorted_groups
 
 _SECONDS_PER_DAY = 86400.0
 
@@ -132,23 +133,25 @@ def seasonal_decompose(
     is_anomaly).  Components are rounded to ``quantize`` decimals so
     downstream hashing moves stable digits.
 
-    Scale notes: ONE shuffle (hash on url); per-group work is the
-    lowess O(n·k) bound (block-chunked inside lowess for giant series);
-    output volume equals input volume — no blow-up.
+    Scale notes: ONE shuffle (hash on url), url-sorted grouped map;
+    per-group work is the lowess O(n·k) bound (row-blocked inside lowess,
+    so memory stays bounded for giant series); output volume equals
+    input volume — no blow-up.
     """
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
+    def fit_block(pdf: pd.DataFrame) -> pd.DataFrame:
         t = pdf[ts_col].astype("int64").to_numpy() / 1e9 / _SECONDS_PER_DAY
         y = pdf[val_col].to_numpy(dtype=np.float64)
-        trend, seas, rem, anom = stl_decompose(
-            t, y, period_days, frac=frac, n_iter=n_iter, crit=crit
-        )
+        parts = [
+            stl_decompose(t[s:e], y[s:e], period_days, frac=frac, n_iter=n_iter, crit=crit)
+            for s, e in zip(*group_bounds(pdf[id_col].to_numpy()))
+        ]
+        trend, seas, rem, anom = (np.concatenate(c) for c in zip(*parts))
         q = lambda a: np.round(a, quantize)  # noqa: E731
         return pd.DataFrame(
             {
-                "url": pdf[id_col],
-                "ts": pdf[ts_col],
+                "url": pdf[id_col].to_numpy(),
+                "ts": pdf[ts_col].to_numpy(),
                 "val": q(y),
                 "trend": q(trend),
                 "seasonal": q(seas),
@@ -162,4 +165,4 @@ def seasonal_decompose(
         F.col(ts_col).alias(ts_col),
         F.col(val_col).cast("double").alias(val_col),
     ).filter(F.col(val_col).isNotNull())
-    return slim.groupBy(id_col).applyInPandas(fit, STL_SCHEMA)
+    return map_sorted_groups(slim, id_col, ts_col, fit_block, STL_SCHEMA)

@@ -24,9 +24,9 @@ error 1.9 on an exactly-linear series; 1e-9 with it).  Recursions:
 
 Input contract: a REGULAR-cadence series (a gap-filled rollup tier —
 the operator asserts cadence regularity rather than silently assuming
-it).  Scale shape: one shuffle on url, O(n) sequential recursion per
-group (the algorithm is inherently sequential in t, like the Gorilla
-encoder), embarrassingly parallel across urls.
+it).  Scale shape: one shuffle on url (plans/grouped.py), O(n)
+sequential recursion per group (the algorithm is inherently sequential
+in t, like the Gorilla encoder), embarrassingly parallel across urls.
 """
 
 from __future__ import annotations
@@ -35,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yatsm_spark.plans.grouped import group_bounds, map_sorted_groups
 
 
 def holt_winters(
@@ -95,55 +97,39 @@ def hw_forecast(
     than two seasons or with irregular cadence yield no rows — loudly
     absent rather than silently wrong (gap-fill the tier first)."""
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
+    def fit_block(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        ids = pdf[id_col].to_numpy()
+        ts = pdf[ts_col].to_numpy()
         y = pdf[val_col].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col]
-        if y.size < 2 * period_rows:
-            return pd.DataFrame(
-                columns=["url", "ts", "kind", "val", "fitted"]
-            ).astype({"val": float, "fitted": float})
-        steps = ts.diff().dropna()
-        step = steps.median()
-        if not (steps == step).all():  # irregular cadence: refuse
-            return pd.DataFrame(
-                columns=["url", "ts", "kind", "val", "fitted"]
-            ).astype({"val": float, "fitted": float})
-        fitted, fc = holt_winters(
-            y, period_rows, alpha=alpha, beta=beta, gamma=gamma, horizon=horizon
-        )
-        q = lambda a: np.round(a, quantize)  # noqa: E731
-        out = pd.DataFrame(
-            {
-                "url": pdf[id_col],
-                "ts": ts,
-                "kind": "fit",
-                "val": q(y),
-                "fitted": q(fitted),
-            }
-        )
-        if horizon:
-            fts = [ts.iloc[-1] + step * (h + 1) for h in range(horizon)]
-            out = pd.concat(
-                [
-                    out,
-                    pd.DataFrame(
-                        {
-                            "url": pdf[id_col].iloc[0],
-                            "ts": fts,
-                            "kind": "forecast",
-                            "val": np.nan,
-                            "fitted": q(fc),
-                        }
-                    ),
-                ],
-                ignore_index=True,
+        parts = []  # (url, ts, kind, val, fitted) column arrays per emitted run
+        for s, e in zip(*group_bounds(ids)):
+            steps = np.diff(ts[s:e])
+            if e - s < 2 * period_rows or (steps != steps[0]).any():
+                continue  # too short, or irregular cadence: refuse
+            fitted, fc = holt_winters(
+                y[s:e], period_rows, alpha=alpha, beta=beta, gamma=gamma, horizon=horizon
             )
-        return out
+            parts.append((ids[s:e], ts[s:e], np.full(e - s, "fit"), y[s:e], fitted))
+            parts.append(
+                (
+                    np.repeat(ids[s], horizon),
+                    ts[e - 1] + steps[0] * np.arange(1, horizon + 1),
+                    np.full(horizon, "forecast"),
+                    np.full(horizon, np.nan),
+                    fc,
+                )
+            )
+        if not parts:
+            return None
+        url, ts_out, kind, val, fit = (np.concatenate(c) for c in zip(*parts))
+        q = lambda a: np.round(a, quantize)  # noqa: E731
+        return pd.DataFrame(
+            {"url": url, "ts": ts_out, "kind": kind, "val": q(val), "fitted": q(fit)}
+        )
 
     slim = obs.select(
         F.col(id_col).alias(id_col),
         F.col(ts_col).alias(ts_col),
         F.col(val_col).cast("double").alias(val_col),
     ).filter(F.col(val_col).isNotNull())
-    return slim.groupBy(id_col).applyInPandas(fit, HW_SCHEMA)
+    return map_sorted_groups(slim, id_col, ts_col, fit_block, HW_SCHEMA)

@@ -52,6 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yatsm_spark.plans.grouped import group_bounds, map_sorted_groups
+
 _LAM_GRID = tuple(10.0 ** e for e in range(-6, 7))  # GCV grid, fixed
 
 
@@ -225,12 +227,8 @@ def longterm_pheno(
         .agg(F.count("*").alias("n"), F.sum("v").alias("s"))
     )
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        url = pdf["url"].iloc[0]
-        pdf = pdf.sort_values("doy", kind="mergesort")
-        doy = pdf["doy"].to_numpy(dtype=np.float64)
-        n = pdf["n"].to_numpy(dtype=np.float64)
-        ybar = pdf["s"].to_numpy(dtype=np.float64) / n
+    def fit(url: str, doy: np.ndarray, n: np.ndarray, s: np.ndarray) -> dict:
+        ybar = s / n
         n_obs = int(n.sum())
         row = {
             "url": url, "n_obs": n_obs, "n_doy": int(doy.size),
@@ -261,6 +259,15 @@ def longterm_pheno(
                 spring_doy=spring, autumn_doy=autumn,
                 cor_x1e4=None if cor is None else q(cor),
             )
-        return pd.DataFrame([row])
+        return row
 
-    return per_doy.groupBy("url").applyInPandas(fit, PHENO_SCHEMA)
+    def fit_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        urls = pdf["url"].to_numpy()
+        doy, n, s = (pdf[c].to_numpy(dtype=np.float64) for c in ("doy", "n", "s"))
+        rows = [
+            fit(urls[a], doy[a:b], n[a:b], s[a:b]) for a, b in zip(*group_bounds(urls))
+        ]
+        # object columns keep ints exact and nulls as None through Arrow
+        return pd.DataFrame(rows, dtype=object)
+
+    return map_sorted_groups(per_doy, "url", "doy", fit_block, PHENO_SCHEMA)

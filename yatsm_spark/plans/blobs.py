@@ -2,8 +2,8 @@
 
 The north_star sink (BASELINE.json:6): per (url, tier), the bucket series
 is encoded into ``ts_blob`` (delta-of-delta, microsecond epochs) +
-``val_blob`` (Gorilla XOR of the measured value) via one url shuffle +
-partition-batched ``mapInPandas`` — numpy kernels inside
+``val_blob`` (Gorilla XOR of the measured value) via the url-sorted
+grouped map (plans/grouped.py) — numpy kernels inside
 (functions/codec.py), binary columns out.  ``decode_blobs`` is the inverse
 (exploded points) for verification and point queries.
 
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yatsm_spark.functions.codec import CODEC_VERSION, decode_series, encode_series
+from yatsm_spark.plans.grouped import group_bounds, map_sorted_groups
 
 BLOBS_SCHEMA = (
     "url string, tier string, start_ts timestamp, end_ts timestamp, "
@@ -35,39 +36,12 @@ BLOBS_SCHEMA = (
 POINTS_SCHEMA = "url string, tier string, bucket_ts timestamp, value double"
 
 
-def _url_runs(batches, ts_col: str, value_cols: tuple[str, ...]):
-    """Shared partition-batched iterator for the blob encoders: turns the
-    Arrow batch stream of one url-contiguous partition into numpy
-    (urls, ts_us, {col: values}) flushes.  The last url of each batch is
-    held back and re-prepended to the next (its run may continue there) —
-    this carry-over subtlety lives HERE exactly once, so both encoders
-    stay in lockstep."""
-    pend: tuple | None = None
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        urls = pdf["url"].to_numpy()
-        ts_us = pdf[ts_col].astype("int64").to_numpy() // 1000  # ns -> us
-        vals = {c: pdf[c].to_numpy(dtype="float64") for c in value_cols}
-        if pend is not None:
-            urls = np.concatenate((pend[0], urls))
-            ts_us = np.concatenate((pend[1], ts_us))
-            vals = {c: np.concatenate((pend[2][c], vals[c])) for c in value_cols}
-        # rows are url-contiguous by the sort, so the last url's run is a
-        # suffix; hold it back for the next batch
-        cut = int(np.flatnonzero(urls == urls[-1])[0])
-        pend = (urls[cut:], ts_us[cut:], {c: vals[c][cut:] for c in value_cols})
-        if cut:
-            yield urls[:cut], ts_us[:cut], {c: vals[c][:cut] for c in value_cols}
-    if pend is not None and pend[0].size:
-        yield pend
-
-
-def _run_bounds(urls: np.ndarray):
-    """(start, end) index pairs of each url run in a url-contiguous array —
-    one vectorized comparison, no pandas groupby."""
-    bounds = np.flatnonzero(urls[1:] != urls[:-1]) + 1
-    return np.concatenate(([0], bounds)), np.concatenate((bounds, [urls.size]))
+def _block_arrays(pdf: pd.DataFrame, ts_col: str, value_cols: tuple[str, ...]):
+    """numpy columns of one url-sorted block for the blob encoders:
+    (urls, ts_us, {col: float64 values})."""
+    ts_us = pdf[ts_col].astype("int64").to_numpy() // 1000  # ns -> us
+    vals = {c: pdf[c].to_numpy(dtype="float64") for c in value_cols}
+    return pdf["url"].to_numpy(), ts_us, vals
 
 
 def encode_blobs(
@@ -79,14 +53,12 @@ def encode_blobs(
 ) -> DataFrame:
     """Encode each url's (ts, value) series into one blob row.
 
-    Physical plan: repartition(url) + sortWithinPartitions(url, ts) +
-    ``mapInPandas`` over whole partitions — one Arrow batch carries MANY
+    Physical plan: the url-sorted grouped map
+    (plans/grouped.py::map_sorted_groups) — one Arrow batch carries MANY
     contiguous url groups, so the per-group Python/Arrow overhead that a
     ``groupBy().applyInPandas`` pays (one UDF call + one pandas frame per
     group) is amortized across the batch.  Measured ~2.5x faster at 20k
-    groups of ~80 rows; identical output.  Groups split across batch
-    boundaries are carried over inside the iterator (rows are
-    partition-contiguous by the sort).
+    groups of ~80 rows; identical output.
     """
 
     out_cols = [
@@ -94,42 +66,34 @@ def encode_blobs(
         "ts_blob", "val_blob", "codec_ver",
     ]
 
-    def encode_partition(batches):
-        for urls, ts_us, vals in _url_runs(batches, ts_col, (value_col,)):
-            v = vals[value_col]
-            rows = []
-            for s, e in zip(*_run_bounds(urls)):
-                t_g, v_g = ts_us[s:e], v[s:e]
-                order = np.argsort(t_g, kind="stable")
-                t_g, v_g = t_g[order], v_g[order]
-                ts_blob, val_blob = encode_series(t_g, v_g)
-                rows.append(
-                    (
-                        urls[s],
-                        tier,
-                        pd.Timestamp(t_g[0] * 1000),
-                        pd.Timestamp(t_g[-1] * 1000),
-                        e - s,
-                        ts_blob,
-                        val_blob,
-                        CODEC_VERSION,
-                    )
+    def encode_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        urls, ts_us, vals = _block_arrays(pdf, ts_col, (value_col,))
+        v = vals[value_col]
+        rows = []
+        for s, e in zip(*group_bounds(urls)):
+            t_g, v_g = ts_us[s:e], v[s:e]
+            order = np.argsort(t_g, kind="stable")
+            t_g, v_g = t_g[order], v_g[order]
+            ts_blob, val_blob = encode_series(t_g, v_g)
+            rows.append(
+                (
+                    urls[s],
+                    tier,
+                    pd.Timestamp(t_g[0] * 1000),
+                    pd.Timestamp(t_g[-1] * 1000),
+                    e - s,
+                    ts_blob,
+                    val_blob,
+                    CODEC_VERSION,
                 )
-            if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
+            )
+        return pd.DataFrame(rows, columns=out_cols)
 
     src = tier_df
     if "gap_filled" in tier_df.columns:
         src = src.filter(~F.col("gap_filled"))
     proj = src.select("url", ts_col, F.col(value_col).cast("double").alias(value_col))
-    if presorted:
-        # url-bucketed, url-sorted input (write_bucketed_tier): zero-shuffle
-        return proj.mapInPandas(encode_partition, schema=BLOBS_SCHEMA)
-    return (
-        proj.repartition("url")
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(encode_partition, schema=BLOBS_SCHEMA)
-    )
+    return map_sorted_groups(proj, "url", ts_col, encode_block, BLOBS_SCHEMA, presorted)
 
 
 def decode_blobs(blobs: DataFrame) -> DataFrame:
@@ -254,8 +218,8 @@ def encode_tier_blobs(
     so writing BOTH archives lets the tier parquet age out entirely with
     no information loss (asserted end-to-end in tests/test_codec.py).
 
-    Same shuffle-free-capable physical plan as encode_blobs (url
-    repartition+sort, or presorted scan; numpy boundary slicing per batch).
+    Same shuffle-free-capable physical plan as encode_blobs (url-sorted
+    grouped map, or presorted scan; numpy boundary slicing per block).
     Ints ride the float codec via exact int64->float64 widening (lossless
     to 2^53 — tier counts/sums, incl. summed epoch seconds, are far below).
     """
@@ -263,32 +227,29 @@ def encode_tier_blobs(
     cols = ["url", "tier", "start_ts", "end_ts", "n_points", "ts_blob",
             "stat_blobs", "codec_ver"]
 
-    def encode_partition(batches):
+    def encode_block(pdf: pd.DataFrame) -> pd.DataFrame:
         from yatsm_spark.functions.codec import encode_dod, encode_gorilla
 
-        for urls, ts_us, stats in _url_runs(batches, ts_col, stat_cols):
-            rows = []
-            for s, e in zip(*_run_bounds(urls)):
-                t_g = ts_us[s:e]
-                order = np.argsort(t_g, kind="stable")
-                t_g = t_g[order]
-                blobs = {
-                    c: encode_gorilla(stats[c][s:e][order]) for c in stat_cols
-                }
-                rows.append(
-                    (
-                        urls[s],
-                        tier,
-                        pd.Timestamp(t_g[0] * 1000),
-                        pd.Timestamp(t_g[-1] * 1000),
-                        e - s,
-                        encode_dod(t_g),
-                        blobs,
-                        CODEC_VERSION,
-                    )
+        urls, ts_us, stats = _block_arrays(pdf, ts_col, stat_cols)
+        rows = []
+        for s, e in zip(*group_bounds(urls)):
+            t_g = ts_us[s:e]
+            order = np.argsort(t_g, kind="stable")
+            t_g = t_g[order]
+            blobs = {c: encode_gorilla(stats[c][s:e][order]) for c in stat_cols}
+            rows.append(
+                (
+                    urls[s],
+                    tier,
+                    pd.Timestamp(t_g[0] * 1000),
+                    pd.Timestamp(t_g[-1] * 1000),
+                    e - s,
+                    encode_dod(t_g),
+                    blobs,
+                    CODEC_VERSION,
                 )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            )
+        return pd.DataFrame(rows, columns=cols)
 
     src = tier_df
     if "gap_filled" in tier_df.columns:
@@ -296,13 +257,7 @@ def encode_tier_blobs(
     proj = src.select(
         "url", ts_col, *[F.col(c).cast("double").alias(c) for c in stat_cols]
     )
-    if presorted:
-        return proj.mapInPandas(encode_partition, schema=TIER_BLOBS_SCHEMA)
-    return (
-        proj.repartition("url")
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(encode_partition, schema=TIER_BLOBS_SCHEMA)
-    )
+    return map_sorted_groups(proj, "url", ts_col, encode_block, TIER_BLOBS_SCHEMA, presorted)
 
 
 LANG_BLOBS_SCHEMA = (
@@ -310,7 +265,7 @@ LANG_BLOBS_SCHEMA = (
     "n_points int, ts_blob binary, cnt_blob binary, codec_ver int"
 )
 
-# separator for the synthetic (url, lang) run key fed through _url_runs —
+# separator for the synthetic (url, lang) group key —
 # \x01 cannot appear in a url or a lang code
 _LANG_KEY_SEP = "\x01"
 
@@ -324,41 +279,38 @@ def encode_lang_blobs(
     stats ride :func:`encode_tier_blobs`; this holds the map column's
     history).  Counts are tiny ints so the XOR stream is near-free.
 
-    Physical plan mirrors the other encoders: one url shuffle (all of a
-    url's languages co-locate with its other per-url work), partition
-    sort on (url, lang, ts), ``mapInPandas`` with run slicing — the
-    (url, lang) composite rides the shared ``_url_runs`` iterator as a
-    single separator-joined key column."""
+    Physical plan mirrors the other encoders: the url-sorted grouped map
+    with run slicing, keyed by the (url, lang) composite as a single
+    separator-joined key column."""
 
     cols = ["url", "tier", "lang", "start_ts", "end_ts", "n_points",
             "ts_blob", "cnt_blob", "codec_ver"]
 
-    def encode_partition(batches):
+    def encode_block(pdf: pd.DataFrame) -> pd.DataFrame:
         from yatsm_spark.functions.codec import encode_dod, encode_gorilla
 
-        for keys, ts_us, vals in _url_runs(batches, ts_col, ("cnt",)):
-            cnts = vals["cnt"]
-            rows = []
-            for s, e in zip(*_run_bounds(keys)):
-                t_g = ts_us[s:e]
-                order = np.argsort(t_g, kind="stable")
-                t_g = t_g[order]
-                url, lang = keys[s].split(_LANG_KEY_SEP, 1)
-                rows.append(
-                    (
-                        url,
-                        tier,
-                        lang,
-                        pd.Timestamp(t_g[0] * 1000),
-                        pd.Timestamp(t_g[-1] * 1000),
-                        e - s,
-                        encode_dod(t_g),
-                        encode_gorilla(cnts[s:e][order]),
-                        CODEC_VERSION,
-                    )
+        keys, ts_us, vals = _block_arrays(pdf, ts_col, ("cnt",))
+        cnts = vals["cnt"]
+        rows = []
+        for s, e in zip(*group_bounds(keys)):
+            t_g = ts_us[s:e]
+            order = np.argsort(t_g, kind="stable")
+            t_g = t_g[order]
+            url, lang = keys[s].split(_LANG_KEY_SEP, 1)
+            rows.append(
+                (
+                    url,
+                    tier,
+                    lang,
+                    pd.Timestamp(t_g[0] * 1000),
+                    pd.Timestamp(t_g[-1] * 1000),
+                    e - s,
+                    encode_dod(t_g),
+                    encode_gorilla(cnts[s:e][order]),
+                    CODEC_VERSION,
                 )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            )
+        return pd.DataFrame(rows, columns=cols)
 
     src = tier_df
     if "gap_filled" in tier_df.columns:
@@ -371,11 +323,7 @@ def encode_lang_blobs(
             F.col("cnt").cast("double").alias("cnt"),
         )
     )
-    return (
-        proj.repartition(F.split("url", _LANG_KEY_SEP).getItem(0))
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(encode_partition, schema=LANG_BLOBS_SCHEMA)
-    )
+    return map_sorted_groups(proj, "url", ts_col, encode_block, LANG_BLOBS_SCHEMA)
 
 
 def decode_lang_blobs(blobs: DataFrame) -> DataFrame:

@@ -1,9 +1,10 @@
-"""Distributed CCDC segmentation: groupBy(url).applyInPandas over the kernels.
+"""Distributed CCDC segmentation: a url-sorted grouped map over the kernels.
 
 The Spark-side analog of the reference's per-pixel loop in
 yatsm/cli/line.py + algorithms/ccdc.py::CCDCesque.fit [U] — one Arrow batch
-per url series, pure-numpy kernels inside (functions/ccdc.py), structured
-``segments`` rows out (SURVEY.md §1.2 segments schema).
+per block of whole url series (plans/grouped.py::map_sorted_groups),
+pure-numpy kernels inside (functions/ccdc.py), structured ``segments``
+rows out (SURVEY.md §1.2 segments schema).
 
 Scale notes:
   * ONE shuffle (hash on url).  Group size is bounded by construction when
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yatsm_spark.functions.ccdc import CCDCParams, fit_series_chunked
+from yatsm_spark.plans.grouped import map_sorted_groups
 
 SEGMENTS_SCHEMA = (
     "url string, seg_id int, start_ts timestamp, end_ts timestamp, "
@@ -46,66 +48,32 @@ def _days_to_ts(days: float):
     return pd.Timestamp(round(days * _SECONDS_PER_DAY * 1e6), unit="us")
 
 
-def _make_fit_and_rows(
-    params: CCDCParams, ts_col: str, value_col: str, max_group_rows: int = 50_000
-):
-    """The two halves of per-group segmentation: fit (kernels) and
-    row-building.  Split so the partition runner can batch the K8 omission
-    tests ACROSS groups between the halves."""
-
-    def fit_group(pdf: pd.DataFrame, collect: list | None = None):
-        url = pdf["url"].iloc[0]
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        t = pdf[ts_col].astype("int64").to_numpy() / 1e9 / _SECONDS_PER_DAY
-        y = pdf[value_col].to_numpy(dtype=np.float64)
-        ok = ~np.isnan(y)
-        # giant groups (a decade of hourly obs) are fit split-and-stitch:
-        # windows of max_group_rows, committing only break-confirmed
-        # segments and re-fitting from the last break — EXACTLY equal to
-        # the single-pass fit (see fit_series_chunked), no downsampling
-        segs = fit_series_chunked(
-            t[ok], y[ok], params, chunk_rows=max_group_rows, omission_collect=collect
-        )
-        return url, segs
-
-    def rows_for(url, segs) -> pd.DataFrame:
-        rows = []
-        for sid, s in enumerate(segs):
-            rows.append(
-                {
-                    "url": url,
-                    "seg_id": sid,
-                    "start_ts": _days_to_ts(s.start_t),
-                    "end_ts": _days_to_ts(s.end_t),
-                    "break_ts": _days_to_ts(s.break_t),
-                    "n_obs": s.n_obs,
-                    "coef": [float(c) for c in s.coef],
-                    "rmse": None if math.isnan(s.rmse) else float(s.rmse),
-                    "magnitude": None if math.isnan(s.magnitude) else float(s.magnitude),
-                    "status": s.status,
-                }
-            )
-        out = pd.DataFrame(rows)
-        if len(out):
-            # pin dtypes so all-None/all-NaT columns (no-break groups)
-            # concat cleanly with mixed groups — object-dtype NA columns
-            # trip pandas' future concat dtype rules
-            out = out.astype({"rmse": "float64", "magnitude": "float64"})
-            for c in ("start_ts", "end_ts", "break_ts"):
-                out[c] = pd.to_datetime(out[c])
-        return out
-
-    return fit_group, rows_for
-
-
-def make_segmenter(params: CCDCParams, ts_col: str, value_col: str, max_group_rows: int = 50_000):
-    """Build the per-group pandas function (closure keeps params picklable)."""
-    fit_group, rows_for = _make_fit_and_rows(params, ts_col, value_col, max_group_rows)
-
-    def segment_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return rows_for(*fit_group(pdf))
-
-    return segment_group
+def _segment_rows(fitted: list) -> pd.DataFrame:
+    """``segments`` rows of a block's fitted (url, segments) pairs."""
+    rows = [
+        {
+            "url": url,
+            "seg_id": sid,
+            "start_ts": _days_to_ts(s.start_t),
+            "end_ts": _days_to_ts(s.end_t),
+            "break_ts": _days_to_ts(s.break_t),
+            "n_obs": s.n_obs,
+            "coef": [float(c) for c in s.coef],
+            "rmse": None if math.isnan(s.rmse) else float(s.rmse),
+            "magnitude": None if math.isnan(s.magnitude) else float(s.magnitude),
+            "status": s.status,
+        }
+        for url, segs in fitted
+        for sid, s in enumerate(segs)
+    ]
+    out = pd.DataFrame(rows)
+    if len(out):
+        # pin dtypes: all-None/all-NaT columns (no-break blocks) would
+        # otherwise reach Arrow as object-dtype NA columns
+        out = out.astype({"rmse": "float64", "magnitude": "float64"})
+        for c in ("start_ts", "end_ts", "break_ts"):
+            out[c] = pd.to_datetime(out[c])
+    return out
 
 
 def segment_series(
@@ -137,10 +105,24 @@ def segment_series(
         )
         ts_col = "_obs_ts"
     src = src.select("url", ts_col, value_col)
-    fit_group, rows_for = _make_fit_and_rows(params, ts_col, value_col, max_group_rows)
     batch_omission = params.omission_alpha > 0
 
-    def flush_block(pdf_block: pd.DataFrame) -> pd.DataFrame | None:
+    def fit_group(pdf: pd.DataFrame, collect: list | None = None):
+        url = pdf["url"].iloc[0]
+        pdf = pdf.sort_values(ts_col, kind="mergesort")
+        t = pdf[ts_col].astype("int64").to_numpy() / 1e9 / _SECONDS_PER_DAY
+        y = pdf[value_col].to_numpy(dtype=np.float64)
+        ok = ~np.isnan(y)
+        # giant groups (a decade of hourly obs) are fit split-and-stitch:
+        # windows of max_group_rows, committing only break-confirmed
+        # segments and re-fitting from the last break — EXACTLY equal to
+        # the single-pass fit (see fit_series_chunked), no downsampling
+        segs = fit_series_chunked(
+            t[ok], y[ok], params, chunk_rows=max_group_rows, omission_collect=collect
+        )
+        return url, segs
+
+    def flush_block(pdf_block: pd.DataFrame) -> pd.DataFrame:
         # fit every group in the block first, batching the K8 omission
         # tests across ALL groups' segments: one recresid_batch sweep
         # amortizes the sequential recursive-residual loop (the kernel
@@ -160,40 +142,6 @@ def segment_series(
             for (seg, _, _), hit in zip(collect, flags):
                 if hit:
                     seg.status = seg.status + "+omission"
-        frames = [rows_for(u, s) for u, s in fitted]
-        frames = [f for f in frames if not f.empty]
-        return pd.concat(frames, ignore_index=True) if frames else None
+        return _segment_rows(fitted)
 
-    def segment_partition(batches):
-        # partition-batched grouped map (same pattern as plans/blobs.py):
-        # rows arrive sorted by (url, ts); groups contiguous; the last url
-        # of each Arrow batch may continue in the next, so it is held back.
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-            last_url = pdf["url"].iloc[-1]
-            tail = pdf["url"].to_numpy() == last_url
-            complete, pending = pdf[~tail], pdf[tail]
-            if not complete.empty:
-                out = flush_block(complete)
-                if out is not None:
-                    yield out
-        if pending is not None and not pending.empty:
-            out = flush_block(pending)
-            if out is not None:
-                yield out
-
-    if presorted:
-        # caller contract: input partitions are already url-contiguous and
-        # (url, ts)-sorted — e.g. a url-bucketed, url-sorted table
-        # (sources/storage.py::write_bucketed_tier).  Kernel stage runs
-        # with ZERO shuffle: scan -> mapInPandas.
-        return src.mapInPandas(segment_partition, schema=SEGMENTS_SCHEMA)
-    return (
-        src.repartition("url")
-        .sortWithinPartitions("url", ts_col)
-        .mapInPandas(segment_partition, schema=SEGMENTS_SCHEMA)
-    )
+    return map_sorted_groups(src, "url", ts_col, flush_block, SEGMENTS_SCHEMA, presorted)

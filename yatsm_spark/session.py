@@ -15,8 +15,8 @@ from pyspark.sql import SparkSession
 _CORRECTNESS_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # One url's whole series must fit one Arrow batch for applyInPandas
-    # kernels; groups are bounded upstream (see plans/segmentation.py).
+    # Arrow batch size of the pandas-UDF stages; the grouped kernels carry
+    # a url split across batches over to the next (plans/grouped.py).
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
 }
 
@@ -28,6 +28,19 @@ _PERF_CONFS = {
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a local session: ``$YATSM_SPARK_DRIVER_MEM``
+    when set, else a quarter of physical RAM, clamped to [1g, 48g].  A
+    fixed 48g default let the driver JVM outgrow a 16 GB machine's RAM
+    and be OOM-killed mid test suite."""
+    explicit = os.environ.get("YATSM_SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(max(phys_bytes // 4 >> 20, 1024), 48 * 1024)}m"
 
 
 def get_spark(
@@ -67,8 +80,7 @@ def get_spark(
         shuffle_partitions = max(8, 2 * ncores)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
 
-    driver_mem = os.environ.get("YATSM_SPARK_DRIVER_MEM", "48g")
-    builder = builder.config("spark.driver.memory", driver_mem)
+    builder = builder.config("spark.driver.memory", driver_memory())
 
     for k, v in {**_PERF_CONFS, **(extra_confs or {}), **_CORRECTNESS_CONFS}.items():
         builder = builder.config(k, v)
